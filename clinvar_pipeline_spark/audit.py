@@ -7,8 +7,9 @@ counter email (SURVEY §5.1); this engine's equivalents are:
   drop counts (no silent truncation: the pair-generation queries keep
   their hot-key exclusions lazy, this reports what they exclude);
 - :func:`explain_audit` — physical-plan smells over the whole query
-  registry (cartesian products, row-Python UDFs, unpruned scans),
-  with an explicit waiver table for the plans that are intended.
+  registry (cartesian products, row-Python UDFs, Python-built local
+  tables, unpruned scans), with an explicit waiver table for the plans
+  that are intended.
 
 ``tools/skew_report.py`` and ``tools/explain_audit.py`` are thin
 wrappers; ``python -m clinvar_pipeline_spark --audit --sf DIR`` runs
@@ -36,9 +37,11 @@ WAIVERS: dict[str, set[str]] = {
     # scoring fans the ONE-ROW-PER-DOC count frame out against the
     # L-row per-language default frame (docs x n_languages) — the
     # intended broadcast nested loop; the trigram stream itself only
-    # ever equi-joins the charset^3-bounded weight table
-    "langid": {"nested-loop-join"},
-    "langid_report": {"nested-loop-join"},
+    # ever equi-joins the charset^3-bounded weight table. That weight
+    # model is trained once per corpus in Python (caching.memo) and
+    # enters the plan as two local tables, both broadcast
+    "langid": {"nested-loop-join", "python-local-relation"},
+    "langid_report": {"nested-loop-join", "python-local-relation"},
     # the pair expansion (lang < lang cross, lang IN (la, lb)) runs
     # over the HLL REGISTER frames — |langs| and |langs| x 256 rows
     # by construction at any corpus size; the corpus-sized work
@@ -69,6 +72,9 @@ WAIVERS: dict[str, set[str]] = {
     # same 1-row stat-combine shape: per table the purged and total
     # counts join into one audit row; the cascade itself is semi joins
     "erasure_audit": {"nested-loop-join"},
+    # the query's result IS the locally computed training output: 8 merge
+    # rows, scanned once by the one action that reads them
+    "bpe_merges": {"python-local-relation"},
 }
 
 
@@ -79,6 +85,12 @@ def plan_smells(name: str, plan: str) -> list[str]:
         smells.append("nested-loop-join")
     if "BatchEvalPython" in plan:
         smells.append("row-python-udf")
+    # createDataFrame over a local list scans a Python-parallelized RDD
+    # (formatted plans name its creation site): every action re-runs a
+    # Python stage for what a literal (create_map, inline) plans in the
+    # JVM. A localCheckpoint's Scan ExistingRDD is not flagged.
+    if re.search(r"Arguments: [^\n]*applySchemaToPythonRDD[^\n]*ExistingRDD", plan):
+        smells.append("python-local-relation")
     # every parquet scan should prune columns (ReadSchema never lists
     # all 16 lineitem columns for narrow queries — heuristic: >12 cols)
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):

@@ -111,6 +111,14 @@ def _aux(spark: SparkSession, aux_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{aux_dir}/{name}.parquet")
 
 
+def _print_counters(spark: SparkSession, path: str) -> None:
+    """Print a counters frame from the parquet just written to ``path``;
+    collecting the frame that was written would re-plan and re-run
+    every diff behind it."""
+    for r in spark.read.parquet(path).collect():
+        print(f"{r['counter']}: {r['value']}")
+
+
 def cmd_load(spark: SparkSession, args) -> None:
     from clinvar_pipeline_spark.plans.load import (
         empty_snapshot,
@@ -129,8 +137,7 @@ def cmd_load(spark: SparkSession, args) -> None:
     write_snapshot(res.snapshot, args.out)
     res.counters.write.mode("overwrite").parquet(f"{args.out}/counters")
     res.variant_diff.write.mode("overwrite").parquet(f"{args.out}/variant_diff")
-    for r in res.counters.collect():
-        print(f"{r['counter']}: {r['value']}")
+    _print_counters(spark, f"{args.out}/counters")
 
 
 def cmd_annotate(spark: SparkSession, args) -> None:
@@ -153,8 +160,7 @@ def cmd_annotate(spark: SparkSession, args) -> None:
     res.annot_diff.write.mode("overwrite").parquet(f"{args.out}/annot_diff")
     res.unmatchable.write.mode("overwrite").parquet(f"{args.out}/unmatchable")
     res.counters.write.mode("overwrite").parquet(f"{args.out}/counters")
-    for r in res.counters.collect():
-        print(f"{r['counter']}: {r['value']}")
+    _print_counters(spark, f"{args.out}/counters")
 
 
 def cmd_nightly(spark: SparkSession, args) -> None:
@@ -214,18 +220,13 @@ def cmd_nightly(spark: SparkSession, args) -> None:
         rs_args.snapshot = args.out
         rs_args.out = f"{args.out}/with_rs"
         t0 = time.time()
-        cmd_add_rs_ids(spark, rs_args)
+        n_rs = cmd_add_rs_ids(spark, rs_args)
         print(f"nightly-phase rs: [{time.time() - t0:.1f}s]")
         vcf_snapshot = rs_args.out
-        rs_c = (
-            spark.read.parquet(f"{rs_args.out}/variants")
-            .filter(F.col("rs_id").isNotNull())
-            .agg(F.count(F.lit(1)).cast("long").alias("value"))
-            .select(
-                F.lit("rs").alias("phase"),
-                F.lit("VARIANTS_WITH_RS_ID").alias("counter"),
-                "value",
-            )
+        rs_c = spark.range(1).select(
+            F.lit("rs").alias("phase"),
+            F.lit("VARIANTS_WITH_RS_ID").alias("counter"),
+            F.lit(n_rs).cast("long").alias("value"),
         )
         merged = merged.unionByName(rs_c)
     if args.with_vcf:
@@ -381,12 +382,14 @@ def cmd_dry_run(spark: SparkSession, args) -> None:
         print(f"{r['counter']}: {r['value']}")
 
 
-def cmd_add_rs_ids(spark: SparkSession, args) -> None:
+def cmd_add_rs_ids(spark: SparkSession, args) -> int:
     """--addRsIds (Manager.java -> VariantRsId.run): by default rs ids
     come from the snapshot's own xdb_ids (xdb_key 48, link_text
     starting 'rs'), the reference pipeline's source. Passing --dbsnp
     instead runs the positional (chr,pos,ref,alt) dbSNP lookup of
-    Clinvar2Vcf.getRsIs — a documented extension, not Manager parity."""
+    Clinvar2Vcf.getRsIs — a documented extension, not Manager parity.
+    Returns the number of variants with an rs id, counted from the
+    written snapshot."""
     from clinvar_pipeline_spark.plans.load import (
         Snapshot,
         read_snapshot,
@@ -411,8 +414,13 @@ def cmd_add_rs_ids(spark: SparkSession, args) -> None:
         ),
         args.out,
     )
-    n = updated.filter(F.col("rs_id").isNotNull()).count()
+    n = (
+        spark.read.parquet(f"{args.out}/variants")
+        .filter(F.col("rs_id").isNotNull())
+        .count()
+    )
     print(f"variants_with_rs_id: {n}")
+    return n
 
 
 def cmd_clinvar2vcf(spark: SparkSession, args) -> None:

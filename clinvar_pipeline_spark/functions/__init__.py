@@ -1,9 +1,10 @@
 """Pure column-expression library (no IO).
 
 Everything here returns Catalyst Column expressions (JVM-side,
-whole-stage-codegen friendly) except the two operators that genuinely
-need Python — UTF-8 byte-budget truncation and width-bucketed packing —
-which are Arrow-batched pandas UDFs.
+whole-stage-codegen friendly), UTF-8 byte-budget truncation and
+width-bucketed packing included, except the two embedding kernels in
+``hashes`` (sign-LSH buckets, batched dot products), which are
+Arrow-batched pandas UDFs.
 """
 
 from clinvar_pipeline_spark.functions.sets import (

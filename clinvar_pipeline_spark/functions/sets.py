@@ -147,3 +147,11 @@ def first_in_document_order(arr: Column | str) -> Column:
 def literal_str_set(values: Iterable[str]) -> Column:
     """A literal array column from a Python set/list of strings."""
     return F.array(*[F.lit(v) for v in sorted(values)])
+
+
+def literal_map(mapping: Mapping) -> Column:
+    """A constant lookup table as a map literal: ``literal_map(m)[k]``
+    is ``m[k]``, or null for a key (or a null) not in ``m``. Prefer it
+    to joining a table built from the dict: in PySpark that table is a
+    Python-parallelized RDD, and every action re-runs its Python stage."""
+    return F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])

@@ -1,17 +1,14 @@
-"""Text expressions: term-name normalization (JVM-side), UTF-8
-byte-budget truncation and width-bucketed packing (Arrow pandas UDFs —
-the only two operators in the engine whose exact semantics ``substring``
-/ higher-order functions cannot express, SURVEY §2.8)."""
+"""Text expressions, all JVM-side: term-name normalization, UTF-8
+byte-budget truncation and width-bucketed packing. Each also has a
+plain-Python reference (``byte_trim_py``, ``pack_py``) that the tests
+compare the expressions against."""
 
 from __future__ import annotations
 
 from typing import List, Optional
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 from clinvar_pipeline_spark.config import TRIM_SUFFIX
 
@@ -38,8 +35,10 @@ def normalize_term_key(name: Column | str) -> Column:
 # Oracle VARCHAR2(4000 BYTE) parity: a string whose UTF-8 encoding
 # exceeds `budget` bytes is cut (never splitting a multibyte sequence)
 # so that trimmed + " ..." fits in `budget`, and " ..." is appended to
-# signal truncation. `substring` is char-based so it cannot express
-# this; octet_length can only test. Vectorized over Arrow batches.
+# signal truncation. `substring` on the string is char-based, so the
+# cut works on its UTF-8 encoding instead: a UTF-8 character is at most
+# 4 bytes, so the last character boundary at or before the budget is
+# at most 3 continuation bytes back.
 # ---------------------------------------------------------------------------
 
 def _byte_trim_py(s: Optional[str], budget: int, suffix: str = TRIM_SUFFIX) -> Optional[str]:
@@ -55,16 +54,30 @@ def _byte_trim_py(s: Optional[str], budget: int, suffix: str = TRIM_SUFFIX) -> O
 
 
 def byte_trim(col: Column | str, budget: int) -> Column:
-    """Column expression form of the byte-budget trim. Fast path: rows
-    already within budget bypass Python entirely via ``octet_length``
-    guard (the UDF only ever sees rows that might need cutting)."""
-
-    @pandas_udf(StringType())
-    def _trim(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: _byte_trim_py(v, budget))
-
+    """Column expression form of the byte-budget trim. A row within
+    budget is returned as is; a longer one is cut at the last UTF-8
+    character boundary at or before ``budget - len(" ...")`` bytes,
+    found by stepping back over continuation bytes (``10xxxxxx``)."""
+    keep = budget - len(TRIM_SUFFIX.encode("utf-8"))
+    if keep < 0:
+        raise ValueError(f"byte budget {budget} is shorter than {TRIM_SUFFIX!r}")
     c = _col(col)
-    return F.when(F.octet_length(c) <= F.lit(budget), c).otherwise(_trim(c))
+    raw = F.encode(c, "UTF-8")
+
+    def continuation(pos: int) -> Column:
+        # the 1-based byte at ``pos`` (binary compares unsigned)
+        b = F.substring(raw, pos, 1)
+        return (b >= F.lit(b"\x80")) & (b <= F.lit(b"\xbf"))
+
+    # rows over budget have at least keep + 1 bytes, and byte 1 of
+    # valid UTF-8 always starts a character, so the chain ends in range
+    cut: Column = F.lit(keep - min(keep, 3))
+    for back in reversed(range(min(keep, 3))):
+        cut = F.when(~continuation(keep - back + 1), F.lit(keep - back)).otherwise(cut)
+    trimmed = F.concat(
+        F.decode(F.substring(raw, 1, cut), "UTF-8"), F.lit(TRIM_SUFFIX)
+    )
+    return F.when(F.octet_length(c) <= F.lit(budget), c).otherwise(trimmed)
 
 
 def byte_trim_py(s: Optional[str], budget: int) -> Optional[str]:
@@ -106,13 +119,44 @@ def _pack_py(items: Optional[List[str]], width: int, joiner: str = "|") -> Optio
 def pack_width_buckets(col: Column | str, width: int) -> Column:
     """array<string> → array<array<string>>: greedy packing of the
     sorted deduped elements into buckets whose ``|``-joined length is
-    ≤ ``width``. Explode the result to materialize the split rows."""
+    ≤ ``width``. Explode the result to materialize the split rows.
 
-    @pandas_udf(ArrayType(ArrayType(StringType())))
-    def _pack(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: _pack_py(list(v) if v is not None else None, width))
+    One ``aggregate`` fold over the sorted set carries (closed buckets,
+    open bucket, open bucket's joined length), the loop of
+    :func:`pack_py`. Null elements are dropped."""
+    c = _col(col)
+    elems = F.array_sort(F.array_distinct(F.filter(c, lambda e: e.isNotNull())))
+    zero = F.struct(
+        F.array().cast("array<array<string>>").alias("done"),
+        F.array().cast("array<string>").alias("cur"),
+        F.lit(0).alias("n"),
+    )
 
-    return _pack(_col(col))
+    def step(acc: Column, e: Column) -> Column:
+        grown = acc["n"] + F.lit(1) + F.length(e)
+        spill = (F.size(acc["cur"]) > 0) & (grown > F.lit(width))
+        return F.when(
+            spill,
+            F.struct(
+                F.concat(acc["done"], F.array(acc["cur"])).alias("done"),
+                F.array(e).alias("cur"),
+                F.length(e).alias("n"),
+            ),
+        ).otherwise(
+            F.struct(
+                acc["done"].alias("done"),
+                F.concat(acc["cur"], F.array(e)).alias("cur"),
+                F.when(F.size(acc["cur"]) > 0, grown).otherwise(F.length(e)).alias("n"),
+            )
+        )
+
+    def finish(acc: Column) -> Column:
+        return F.when(
+            (F.size(acc["cur"]) > 0) | (F.size(acc["done"]) == 0),
+            F.concat(acc["done"], F.array(acc["cur"])),
+        ).otherwise(acc["done"])
+
+    return F.when(c.isNotNull(), F.aggregate(elems, zero, step, finish))
 
 
 def pack_py(items: Optional[List[str]], width: int) -> Optional[List[List[str]]]:

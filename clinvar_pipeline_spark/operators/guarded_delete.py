@@ -8,9 +8,10 @@ annotations) — a mass-delete circuit breaker. Snapshot-functionally:
     decide  = count(stale) / count(existing) > threshold   (driver scalar)
     result  = existing if aborted else existing MINUS stale
 
-The two counts are tiny driver scalars (Spark aggregations, not
-collects of data); the branch is driver logic, exactly like the
-reference's — that part is inherently control-flow.
+The two counts are tiny scalars, both read back by ONE aggregation job
+over ``existing LEFT JOIN touched`` (not collects of data); the branch
+is plain control flow in the calling program, exactly like the
+reference's.
 """
 
 from __future__ import annotations
@@ -50,9 +51,17 @@ def guarded_stale_delete(
         eq = F.col(c).eqNullSafe(F.col(f"_t_{c}"))
         cond = eq if cond is None else cond & eq
     stale = existing.join(t, on=cond, how="left_anti")
-    counts = existing.agg(F.count(F.lit(1)).alias("total")).collect()[0]
-    total = counts["total"]
-    stale_count = stale.count()
+    # both counts in one job: `t` is deduplicated on the key, so the
+    # left join keeps each existing row once, unmatched iff it is stale
+    counts = (
+        existing.join(t.withColumn("_t_hit", F.lit(True)), on=cond, how="left")
+        .agg(
+            F.count(F.lit(1)).alias("total"),
+            F.count(F.when(F.col("_t_hit").isNull(), F.lit(1))).alias("stale"),
+        )
+        .collect()[0]
+    )
+    total, stale_count = counts["total"], counts["stale"]
     aborted = total > 0 and stale_count > threshold * total
     if aborted:
         kept = existing

@@ -27,11 +27,14 @@ Stage map (reference -> here):
 - last-modified W3       -> OR of change flags
 - stale xdb delete W4    -> guarded_stale_delete
 
-Scale: the release is partitioned by input splits; every lookup table
-(genes, prev xdb key-52 slice) is broadcast; the only fact-fact
-shuffles are the diff_sync full-outer joins, all keyed on rgd_id so
-one exchange serves every satellite when snapshots are bucketed by
-rgd_id.
+Scale: the release is partitioned by input splits and parsed once (the
+staged archive feeds both the extraction and the record counters);
+the constant lookups (xref db -> xdb key, assembly -> map key) are
+literal map expressions evaluated in place, and the data lookup
+tables (genes, prev xdb key-52 slice) are broadcast; the only
+fact-fact shuffles are the diff_sync full-outer joins, all keyed on
+rgd_id so one exchange serves every satellite when snapshots are
+bucketed by rgd_id.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ from dataclasses import dataclass, fields
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from clinvar_pipeline_spark.config import (
     ASSEMBLY_TO_MAP_KEY,
@@ -62,6 +66,7 @@ from clinvar_pipeline_spark.config import (
     XREF_DB_TO_XDB_KEY,
 )
 from clinvar_pipeline_spark.functions.sets import (
+    literal_map,
     merge_pipe_sets_ci,
     newer_date,
     ranked_clinsig_merge,
@@ -112,14 +117,23 @@ class Snapshot:
     aliases: DataFrame
 
 
+def _empty(spark: SparkSession, ddl: str) -> DataFrame:
+    """A zero-row frame of schema ``ddl`` planned in the JVM (an empty
+    ``Range``), not a Python-parallelized local list."""
+    schema = DataType.fromDDL(ddl)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
 def empty_snapshot(spark: SparkSession) -> Snapshot:
     return Snapshot(
-        variants=spark.createDataFrame([], VARIANTS_SCHEMA),
-        xdb_ids=spark.createDataFrame([], XDB_IDS_SCHEMA),
-        gene_associations=spark.createDataFrame([], GENE_ASSOC_SCHEMA),
-        map_positions=spark.createDataFrame([], MAP_POS_SCHEMA),
-        hgvs_names=spark.createDataFrame([], HGVS_SCHEMA),
-        aliases=spark.createDataFrame([], ALIASES_SCHEMA),
+        variants=_empty(spark, VARIANTS_SCHEMA),
+        xdb_ids=_empty(spark, XDB_IDS_SCHEMA),
+        gene_associations=_empty(spark, GENE_ASSOC_SCHEMA),
+        map_positions=_empty(spark, MAP_POS_SCHEMA),
+        hgvs_names=_empty(spark, HGVS_SCHEMA),
+        aliases=_empty(spark, ALIASES_SCHEMA),
     )
 
 
@@ -317,9 +331,8 @@ def dispatch_xrefs(inc: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Returns (xdb rows keyed by symbol: symbol, xdb_key, acc_id,
     link_text, notes; unknown-db counter rows). The ~25-way switch is a
-    broadcast mapping join; junk-db filters and per-key accession
+    literal map lookup; junk-db filters and per-key accession
     transforms are expressions."""
-    spark = inc.sparkSession
     x = inc.select(
         "symbol", "primary_rcv", F.explode_outer("xrefs").alias("xr")
     ).select(
@@ -338,10 +351,9 @@ def dispatch_xrefs(inc: DataFrame) -> tuple[DataFrame, DataFrame]:
     x = x.filter(~junk)
 
     known = x.filter(~F.col("db").isin(*XREF_DB_IGNORED))
-    mapping = spark.createDataFrame(
-        list(XREF_DB_TO_XDB_KEY.items()), "db string, xdb_key int"
+    dispatched = known.withColumn(
+        "xdb_key", literal_map(XREF_DB_TO_XDB_KEY)[F.col("db")]
     )
-    dispatched = known.join(F.broadcast(mapping), "db", "left")
     unknown = (
         dispatched.filter(F.col("xdb_key").isNull())
         .groupBy("db")
@@ -466,10 +478,6 @@ def build_incoming_map_positions(inc: DataFrame) -> DataFrame:
     (GRCh37.pN prefix-matched), chr/start/stop required, start>stop
     swapped, fish_band from the cytogenetic location whose chromosome
     prefix matches."""
-    spark = inc.sparkSession
-    amap = spark.createDataFrame(
-        list(ASSEMBLY_TO_MAP_KEY.items()), "assembly_name string, map_key int"
-    )
     loc = inc.select(
         "symbol",
         "primary_rcv",
@@ -490,8 +498,9 @@ def build_incoming_map_positions(inc: DataFrame) -> DataFrame:
     )
     # GRCh37.p13 etc: match on the dot-less prefix
     loc = loc.withColumn(
-        "assembly_name", F.split("assembly", "\\.").getItem(0)
-    ).join(F.broadcast(amap), "assembly_name", "inner")
+        "map_key",
+        literal_map(ASSEMBLY_TO_MAP_KEY)[F.split("assembly", "\\.").getItem(0)],
+    ).filter(F.col("map_key").isNotNull())
     cyto_match = F.try_element_at(
         F.filter(
             F.col("cyto_locations"),
@@ -791,17 +800,19 @@ def load_run(
 ) -> LoadResult:
     """Full --load semantics, snapshot-in/snapshot-out. ``genes_dim``
     must have (gene_rgd_id, gene_id, symbol)."""
-    spark = archive.sparkSession
     ts = F.lit(run_ts).cast("timestamp")
 
-    # Stage the parsed incoming records (the reference's chunk-cache S3
-    # analogue): everything downstream branches off `inc` many times —
-    # without truncation each of the ~6 diffs + collections + counters
-    # would re-parse the XML and re-run the match joins per action.
-    inc = build_incoming_variants(archive).localCheckpoint(eager=True)
+    # Stage the parsed release, then the incoming records extracted from
+    # it (the reference's chunk-cache S3 analogue): the record counters
+    # below read `staged`, and everything downstream branches off `inc`
+    # many times — without truncation each of the ~6 diffs + collections
+    # + counters would re-parse the XML and re-run the match joins per
+    # action.
+    staged = archive.localCheckpoint(eager=True)
+    inc = build_incoming_variants(staged).localCheckpoint(eager=True)
 
     # F4 entry classification + F1/F2 skip counters
-    kind_counters = archive.groupBy("record_kind").agg(
+    kind_counters = staged.groupBy("record_kind").agg(
         F.count(F.lit(1)).alias("value")
     ).select(
         F.concat(F.lit("RECORDS_"), F.upper("record_kind")).alias("counter"), "value"
@@ -811,7 +822,7 @@ def load_run(
     # but the reference warns with dedicated counters — surface the
     # same two canaries (zero rows when clean; unionByName keeps them
     # absent-as-zero like the reference's unsent warnings)
-    canary_counters = archive.select(
+    canary_counters = staged.select(
         F.explode(
             F.array_compact(
                 F.array(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clinvar_pipeline_spark.functions.sets import literal_map
 from clinvar_pipeline_spark.functions.text import (
     byte_trim,
     normalize_term_key,
@@ -83,7 +84,7 @@ def q_map_position_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# F10/F16 — xref DB dispatch via broadcast mapping table + transforms
+# F10/F16 — xref DB dispatch via a literal mapping table + transforms
 # ---------------------------------------------------------------------
 
 @register(
@@ -102,17 +103,17 @@ def q_map_position_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_xref_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F10 (Parser.java:485-585): the ~25-way XRef/@DB switch as a
-    broadcast mapping-table join, with per-key accession transforms
-    (OMIM '#'-suffix split, Orphanet prefix strip) as a when-chain;
-    unmatched DBs drop out of the inner join (counted elsewhere).
+    literal map lookup, with per-key accession transforms (OMIM
+    '#'-suffix split, Orphanet prefix strip) as a when-chain; unmatched
+    DBs look up null and drop out (counted elsewhere).
 
-    Scale: the dispatch table is a literal broadcast — no shuffle."""
+    Scale: the dispatch table is a map literal in the projection — no
+    join, no shuffle."""
     p = _t(spark, sf_dir, "part")
-    mapping = spark.createDataFrame(
-        [("ECONOMY", 52), ("SMALL", 48), ("STANDARD", 54)], ["db", "xdb_key"]
-    )
+    dispatch = literal_map({"ECONOMY": 52, "SMALL": 48, "STANDARD": 54})
     return (
-        p.join(F.broadcast(mapping), F.col("p_type") == F.col("db"))
+        p.withColumn("xdb_key", dispatch[F.col("p_type")].cast("long"))
+        .filter(F.col("xdb_key").isNotNull())
         .select(
             "p_partkey",
             "xdb_key",

@@ -27,10 +27,21 @@ def write_vcf(lines: DataFrame, path: str, header: list[str] | None = None) -> N
     header rows sort first via the grp key. orderBy produces
     range-partitioned sorted output whose partitions coalesce in order,
     so the single text file is globally ordered."""
-    spark = lines.sparkSession
-    hdr = spark.createDataFrame(
-        [(0, i, None, h) for i, h in enumerate(header or VCF_HEADER)],
-        "grp int, pos long, chr string, line string",
+    # the header rows as a literal array of structs, inlined in the JVM
+    hdr = lines.sparkSession.range(1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(0).alias("grp"),
+                        F.lit(i).cast("long").alias("pos"),
+                        F.lit(None).cast("string").alias("chr"),
+                        F.lit(h).alias("line"),
+                    )
+                    for i, h in enumerate(header or VCF_HEADER)
+                ]
+            )
+        )
     )
     data = lines.select(
         F.lit(1).alias("grp"), F.col("pos").cast("long"), F.col("chr"), F.col("line")

@@ -70,3 +70,21 @@ def test_plan_baseline_covers_the_registry_and_matches_live(spark):
     live = plan_signatures(spark, "/root/testdata/sf0.001", probe)
     for name in probe:
         assert live[name] == base[name], name
+
+
+def test_python_local_relation_flagged_not_checkpoint():
+    """A frame built by createDataFrame over a local list scans a
+    Python-parallelized RDD; a localCheckpoint also plans as
+    Scan ExistingRDD but stays in the JVM."""
+    local = """
+(1) Scan ExistingRDD [codegen id : 1]
+Output [2]: [db#0, k#1]
+Arguments: [db#0, k#1], MapPartitionsRDD[4] at applySchemaToPythonRDD at NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)
+"""
+    ckpt = """
+(3) Scan ExistingRDD
+Output [1]: [db#3]
+Arguments: [db#3], MapPartitionsRDD[8] at localCheckpoint at NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(2)
+"""
+    assert plan_smells("x", local) == ["python-local-relation"]
+    assert plan_smells("x", ckpt) == []

@@ -155,6 +155,43 @@ def test_idempotent_second_run(spark, archive, genes_dim, first_run):
     assert a == b
 
 
+def _formatted_plan(df) -> str:
+    qe = df._jdf.queryExecution()
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    return qe.explainString(mode.fromString("formatted"))
+
+
+@pytest.mark.parametrize("night", ["first", "second"])
+def test_load_plans_have_no_python_worker(spark, archive, first_run, tmp_path, night):
+    """With parquet-backed inputs, no output of load_run plans a Python
+    exec node or scans a Python-parallelized local list: the lookup
+    maps, the byte-trim, the empty first-night snapshot and the counters
+    are all JVM expressions. The only ExistingRDD scans are load_run's
+    own localCheckpoints."""
+    import re
+
+    spark.createDataFrame(
+        [(101, "9907", "AP5Z1"), (102, "1111", "OTHER")],
+        "gene_rgd_id long, gene_id string, symbol string",
+    ).write.parquet(str(tmp_path / "genes"))
+    genes = spark.read.parquet(str(tmp_path / "genes"))
+    prev = empty_snapshot(spark) if night == "first" else first_run.snapshot
+    res = load_run(archive, prev, genes)
+    frames = {f: getattr(res.snapshot, f) for f in vars(res.snapshot)}
+    frames |= {"counters": res.counters, "variant_diff": res.variant_diff}
+    assert len(frames) == 8
+    for name, df in frames.items():
+        plan = _formatted_plan(df)
+        assert not re.search(r"ArrowEvalPython|BatchEvalPython", plan), name
+        rdd_scans = [
+            line for line in plan.splitlines()
+            if line.startswith("Arguments:") and "ExistingRDD" in line
+        ]
+        assert rdd_scans, name  # the staged release is in every plan
+        for line in rdd_scans:
+            assert " at localCheckpoint at " in line, (name, line)
+
+
 def test_stale_xdb_guard_deletes_below_threshold(spark, archive, genes_dim, first_run):
     """W4 wiring: a prev xdb row of a variant absent from the run whose
     modification_date predates the cutoff is deleted when the stale set

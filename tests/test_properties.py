@@ -2,10 +2,10 @@
 algebra, byte-trim and width-split invariants.
 
 Python-level properties run hundreds of examples against the exported
-reference implementations (byte_trim_py / pack_py — the same code the
-pandas UDFs wrap). Spark-level properties batch each hypothesis example
-set into ONE DataFrame so the JVM round-trip cost is paid per example
-set, not per case."""
+reference implementations (byte_trim_py / pack_py), which Spark-level
+properties then hold the JVM expressions to. Spark-level properties
+batch each hypothesis example set into ONE DataFrame so the JVM
+round-trip cost is paid per example set, not per case."""
 
 from __future__ import annotations
 
@@ -16,11 +16,16 @@ from clinvar_pipeline_spark.functions.sets import (
     merge_pipe_sets,
     merge_pipe_sets_ci,
 )
-from clinvar_pipeline_spark.functions.text import byte_trim_py, pack_py
+from clinvar_pipeline_spark.functions.text import (
+    byte_trim,
+    byte_trim_py,
+    pack_py,
+    pack_width_buckets,
+)
 from clinvar_pipeline_spark.operators.diff_sync import apply_diff, diff_sync
 
 # ---------------------------------------------------------------------
-# M9 byte-budget trim (pure Python twin of the pandas UDF)
+# M9 byte-budget trim (pure Python reference)
 # ---------------------------------------------------------------------
 
 texts = st.text(max_size=200)
@@ -48,7 +53,7 @@ def test_byte_trim_idempotent(s, budget):
 
 
 # ---------------------------------------------------------------------
-# A3 width-bucketed split (pure Python twin of the pandas UDF)
+# A3 width-bucketed split (pure Python reference)
 # ---------------------------------------------------------------------
 
 elements = st.lists(
@@ -69,6 +74,52 @@ def test_pack_respects_width(items, width):
     # joined serialization must respect the width
     for b in pack_py(items, width):
         assert len("|".join(b)) <= width or len(b) <= 1
+
+
+# ---------------------------------------------------------------------
+# JVM byte-trim and packer == their Python references (batched)
+# ---------------------------------------------------------------------
+
+# 1-, 2-, 3- and 4-byte characters plus U+FFFD, so cuts land inside
+# multibyte sequences; plus arbitrary text
+mixed_texts = st.one_of(
+    st.none(),
+    st.text(alphabet="ab é中😀\ufffd", max_size=60),
+    st.text(max_size=40),
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(mixed_texts, min_size=1, max_size=40),
+    # small budgets are where these strings get cut
+    st.one_of(st.integers(5, 64), st.integers(65, 4000)),
+)
+def test_byte_trim_jvm_matches_python(spark, cases, budget):
+    df = spark.createDataFrame([(c,) for c in cases], "s string")
+    got = [r["t"] for r in df.select(byte_trim("s", budget).alias("t")).collect()]
+    assert got == [byte_trim_py(c, budget) for c in cases]
+
+
+pack_cases = st.lists(
+    st.one_of(
+        st.none(),
+        st.lists(st.text(alphabet="abcXY019é", min_size=1, max_size=10), max_size=30),
+    ),
+    min_size=1,
+    max_size=20,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(pack_cases, st.integers(min_value=1, max_value=40))
+def test_pack_jvm_matches_python(spark, cases, width):
+    df = spark.createDataFrame([(c,) for c in cases], "arr array<string>")
+    got = [
+        None if r["p"] is None else [list(b) for b in r["p"]]
+        for r in df.select(pack_width_buckets("arr", width).alias("p")).collect()
+    ]
+    assert got == [pack_py(c, width) for c in cases]
 
 
 # ---------------------------------------------------------------------
